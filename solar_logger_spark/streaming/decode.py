@@ -321,12 +321,16 @@ def decode_packets(df: DataFrame, payload_col: str = "payload") -> DataFrame:
             "_vals",
             make_decode_values_udf()(F.col("measurement"), F.col("_body")),
         )
-        .filter(F.col("_vals").isNotNull())  # T8: drop undecodable rows
     )
+    # posexplode_outer, not posexplode + a _vals filter: Spark infers
+    # ``isnotnull(_vals) AND size(_vals) > 0`` from an inner generator and
+    # pushes it below the projection, evaluating the decode UDF twice
     return decoded.select(
         "measurement",
         "ts",
-        F.posexplode(F.col("_vals")).alias("_pos", "value"),
+        F.posexplode_outer(F.col("_vals")).alias("_pos", "value"),
+    ).filter(
+        F.col("_pos").isNotNull()  # T8: drop undecodable rows
     ).select(
         "measurement",
         "ts",

@@ -7,7 +7,7 @@ F1-F5) → unpivot to per-field points (T2) → point sink (S4). Threads and
 a 150-slot queue provide the plumbing there; here the same dataflow is
 
     readStream → split_topic → [status branch | data branch]
-               → decode_packets → withWatermark → writeStream
+               → online-device filter → decode_packets → writeStream
 
 and backpressure/batching/restart-recovery come from the micro-batch
 engine + checkpointing (T3/T6 — strictly stronger than the reference's
@@ -15,8 +15,9 @@ lossy in-memory queue; divergence documented in SURVEY §2.9).
 
 Scale notes: topic parsing, time extraction and the unpivot are
 codegen'd column ops; the only Python is the Arrow-batched payload
-decode. The status gate broadcasts a per-device latest-status table —
-at 1000 executors the data stream never shuffles for the gate. Sink
+decode. The status gate collects the latest status per device (one
+row each) and filters the raw data messages to online devices before
+that decode — the data stream never shuffles or joins for the gate. Sink
 files are partitioned by (measurement, date) so downstream time-range +
 measurement queries prune partitions instead of scanning.
 """
@@ -26,13 +27,13 @@ from __future__ import annotations
 import os
 from collections.abc import Sequence
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, Row, SparkSession, functions as F
 from pyspark.sql.streaming import StreamingQuery
 from pyspark.sql.types import (
     BinaryType, StringType, StructField, StructType, TimestampType,
 )
 
-from solar_logger_spark.operators.asof import latest_per_key, status_gate
+from solar_logger_spark.operators.asof import latest_per_key
 from solar_logger_spark.streaming.decode import decode_packets
 
 # Raw message schema — what any transport (MQTT source, file replay,
@@ -79,33 +80,56 @@ def status_updates(df: DataFrame) -> DataFrame:
     )
 
 
-def data_points(df: DataFrame) -> DataFrame:
-    """P7 + F1-F5 + T2: the data branch — topic-routed decode to the
-    canonical ``(measurement, ts, field, value)`` point stream. Event
-    time comes from the packet's embedded epoch (T1), not arrival."""
-    data = (
+def _data_messages(df: DataFrame) -> DataFrame:
+    """P7: the data branch before decode — ``(measurement, payload,
+    ...)`` rows of data-topic messages (codegen)."""
+    return (
         split_topic(df)
         .filter(F.col("kind") == "data")
         .withColumnRenamed("device", "measurement")
     )
-    return decode_packets(data)
+
+
+def data_points(df: DataFrame) -> DataFrame:
+    """P7 + F1-F5 + T2: the data branch — topic-routed decode to the
+    canonical ``(measurement, ts, field, value)`` point stream. Event
+    time comes from the packet's embedded epoch (T1), not arrival."""
+    return decode_packets(_data_messages(df))
+
+
+def _online_points(raw: DataFrame, latest_rows: Sequence[Row]) -> DataFrame:
+    """J1/T5: decode only the data messages of devices whose latest
+    status row says online. The gate is one ``isin`` filter on the raw
+    messages (≤ #devices literals; Spark turns a long list into a hash
+    ``InSet``), so it sits below the decode UDF: an offline device's
+    packets are never decoded or exploded, and the point stream never
+    shuffles or joins."""
+    online = sorted({r.device for r in latest_rows if r.status == "online"})
+    return decode_packets(
+        _data_messages(raw).filter(F.col("measurement").isin(online))
+    )
 
 
 def gated_batch(raw: DataFrame) -> DataFrame:
-    """Batch/foreachBatch form of the reference's online gate (J1/T5):
-    decode data messages, keep only devices whose *latest* status says
-    online. The latest-status reduction is tiny and broadcast — the
-    point stream itself never shuffles."""
-    status = status_updates(raw)
-    points = data_points(raw)
-    return status_gate(
-        points.withColumnRenamed("measurement", "device"), status, keys=["device"]
-    ).withColumnRenamed("device", "measurement")
+    """Batch form of the reference's online gate (J1/T5): decode the
+    data messages of devices whose *latest* status in ``raw`` says
+    online. Runs one small job to collect the latest-status reduction;
+    a device with no status row is dropped."""
+    latest = latest_per_key(
+        status_updates(raw), ["device"], payload_cols=["status"]
+    )
+    return _online_points(raw, latest.collect())
 
 
 class IngestBatchProcessor:
     """foreachBatch body for the ingest sink — pulled into a class so
     idempotency and gating are unit-testable without a live stream.
+
+    Gate: the same path as :func:`gated_batch`, with the batch's status
+    updates folded into the persisted ``_status`` table (the reference's
+    ``self._status`` dict, ``mqtt_classes.py:114-119`` — bounded: one
+    row per device). Until any status has been seen, points pass
+    ungated.
 
     Effectively-once (T6): foreachBatch is at-least-once — after a crash
     between sink write and checkpoint commit, the same ``epoch_id``
@@ -116,22 +140,11 @@ class IngestBatchProcessor:
     commit protocol; this is the same idea scaled down.)
     """
 
-    def __init__(
-        self,
-        output_dir: str,
-        gate_online: bool = True,
-        gate_mode: str = "batch",
-    ) -> None:
-        if gate_mode not in ("batch", "dimension"):
-            raise ValueError(
-                f"gate_mode must be 'batch' or 'dimension', got {gate_mode!r}"
-            )
+    def __init__(self, output_dir: str, gate_online: bool = True) -> None:
         self.status_path = os.path.join(output_dir, "_status")
-        self.dim_path = os.path.join(output_dir, "_status_dim")
         self.points_path = os.path.join(output_dir, "points")
         self.commits_path = os.path.join(output_dir, "_commits")
         self.gate_online = gate_online
-        self.gate_mode = gate_mode
 
     def _commit_marker(self, epoch_id: int) -> str:
         return os.path.join(self.commits_path, f"epoch-{epoch_id}")
@@ -139,12 +152,9 @@ class IngestBatchProcessor:
     def __call__(self, batch: DataFrame, epoch_id: int) -> None:
         if os.path.exists(self._commit_marker(epoch_id)):
             return  # crash-replay of an already-committed batch
-        if self.gate_mode == "dimension":
-            points = self._dimension_gated_points(batch, epoch_id)
-        else:
-            points = self._batch_gated_points(batch)
         (
-            points.withColumn("date", F.to_date("ts"))
+            self._batch_gated_points(batch)
+            .withColumn("date", F.to_date("ts"))
             # time-sorted within each written file → tight per-row-group
             # ts min/max stats, so time-range scans skip row groups even
             # inside a partition
@@ -159,68 +169,23 @@ class IngestBatchProcessor:
 
     def _batch_gated_points(self, batch: DataFrame) -> DataFrame:
         spark_b = batch.sparkSession
-        # 1. fold this batch's status updates into the persisted
-        #    latest-per-device table (the reference's ``self._status``
-        #    dict, mqtt_classes.py:114-119 — bounded: one row per device)
         status = status_updates(batch)
-        try:
+        if os.path.exists(self.status_path):
+            # an unreadable table raises: treating it as "no status"
+            # would pass offline devices' packets
             status = spark_b.read.parquet(self.status_path).unionByName(status)
-        except Exception:
-            pass  # first batch: no persisted status yet
         latest = latest_per_key(status, ["device"], payload_cols=["status"])
         # tiny by construction (≤ #devices rows) — safe to materialize on
         # the driver, which also breaks the read-then-overwrite cycle
         latest_rows = latest.collect()
-        # 2. decode + gate against the merged status
-        points = data_points(batch)
-        if self.gate_online and latest_rows:
-            latest_df = spark_b.createDataFrame(latest_rows, latest.schema)
-            points = status_gate(
-                points.withColumnRenamed("measurement", "device"),
-                latest_df,
-                keys=["device"],
-            ).withColumnRenamed("device", "measurement")
-        if latest_rows:
-            spark_b.createDataFrame(latest_rows, latest.schema).write.mode(
-                "overwrite"
-            ).parquet(self.status_path)
-        return points
-
-    def _dimension_gated_points(
-        self, batch: DataFrame, epoch_id: int
-    ) -> DataFrame:
-        """The composed dimension path: fold the batch's status
-        messages into the MAINTAINED snapshot-store dimension
-        (:func:`status_dimension_sink` — ts-guarded MERGE, so a crash
-        replay re-upserting the same rows is a no-op), then gate the
-        batch's points against the refreshed dimension. The per-batch
-        latest-status reduction of the default path disappears: the
-        dimension already IS that reduction, maintained incrementally.
-
-        Mode migration: a deployment switching from ``gate_mode=
-        'batch'`` (state in ``_status``) must not forget its learned
-        statuses, so an absent dimension is seeded ONCE from the
-        persisted ``_status`` table before the first fold —
-        previously-offline devices stay gated across the switch. (The
-        reverse switch needs no seed: batch mode re-reduces from its
-        own ``_status``, which dimension mode never modifies.)"""
-        from solar_logger_spark.io import merge as M
-
-        if (
-            M.current_snapshot(self.dim_path) is None
-            and os.path.exists(self.status_path)
-        ):
-            M.init_table(
-                batch.sparkSession.read.parquet(self.status_path),
-                self.dim_path,
-            )
-        status_dimension_sink(self.dim_path)(batch, epoch_id)
+        if not latest_rows:
+            return data_points(batch)  # no status seen yet: ungated
+        spark_b.createDataFrame(latest_rows, latest.schema).write.mode(
+            "overwrite"
+        ).parquet(self.status_path)
         if not self.gate_online:
             return data_points(batch)
-        if M.current_snapshot(self.dim_path) is None:
-            return data_points(batch)  # no status seen yet: ungated
-        dim = M.read_table_snapshot(batch.sparkSession, self.dim_path)
-        return gated_batch_from_dimension(batch, dim)
+        return _online_points(batch, latest_rows)
 
 
 def ingest_query(
@@ -230,24 +195,18 @@ def ingest_query(
     checkpoint_dir: str,
     gate_online: bool = True,
     available_now: bool = True,
-    gate_mode: str = "batch",
 ) -> StreamingQuery:
     """End-to-end ingest: parquet-file message stream → decoded gated
     points → parquet append sink partitioned by (measurement, date).
 
-    ``foreachBatch`` is used so the online gate sees each micro-batch's
-    status updates merged with the persisted status table — the same
-    read-your-latest-status semantics as the reference's in-memory
-    ``self._status`` dict, but restart-safe (status survives in the sink
-    directory's ``_status`` subtable).
-
-    ``gate_mode``: ``"batch"`` re-reduces latest-per-device from the
-    raw status history each delivery (the original path);
-    ``"dimension"`` maintains the :func:`status_dimension_sink`
-    snapshot-store dimension incrementally (ts-guarded MERGE) and
-    gates via :func:`gated_batch_from_dimension` — same gate
-    semantics, but the status reduction is table state instead of a
-    per-batch recompute, and the dimension is independently queryable.
+    ``foreachBatch`` runs :class:`IngestBatchProcessor`, the batch form
+    of the online gate: each micro-batch's status updates are merged
+    with the persisted ``_status`` table, reduced to the latest status
+    per device, and only online devices' data messages are decoded — the
+    same read-your-latest-status semantics as the reference's in-memory
+    ``self._status`` dict, but restart-safe. Within one micro-batch the
+    latest status decides for every packet; the per-message,
+    arrival-order form is ``streaming.stateful.stateful_gated_stream``.
     """
     raw = (
         spark.readStream.schema(RAW_SCHEMA)
@@ -255,64 +214,11 @@ def ingest_query(
         .parquet(input_dir)
     )
     writer = raw.writeStream.foreachBatch(
-        IngestBatchProcessor(
-            output_dir, gate_online=gate_online, gate_mode=gate_mode
-        )
+        IngestBatchProcessor(output_dir, gate_online=gate_online)
     ).option("checkpointLocation", checkpoint_dir)
     if available_now:
         writer = writer.trigger(availableNow=True)
     return writer.start()
-
-
-def status_dimension_sink(table_dir: str, keep_snapshots: int = 2):
-    """S3 as a MAINTAINED dimension: a ``foreachBatch`` function that
-    folds each micro-batch's status messages into a latest-per-device
-    table in the io/merge snapshot store (MERGE keyed by device,
-    ``ts``-guarded so a late redelivery of an OLD status can never
-    regress a newer one — at-least-once transports redeliver, T6).
-
-    This closes the loop between the streaming status branch and the
-    snapshot store: ``status_gate`` recomputes latest-per-key per query
-    (fine at any scale — the status side broadcasts), while this sink
-    materializes the same reduction once as queryable table state,
-    which is what a fleet dashboard or an external gate consumer reads.
-    Differential-pinned in tests: streamed upserts == batch
-    ``latest_per_key`` over the full status history.
-
-    Usage::
-
-        q = (raw.writeStream
-             .foreachBatch(status_dimension_sink(dim_dir))
-             .option("checkpointLocation", ckpt).start())
-    """
-    from solar_logger_spark.io.merge import upsert_sink
-
-    inner = upsert_sink(
-        table_dir, keys=["device"], order_col="ts",
-        keep_snapshots=keep_snapshots,
-    )
-
-    def _write(batch: DataFrame, epoch_id: int) -> None:
-        inner(status_updates(batch), epoch_id)
-
-    return _write
-
-
-def gated_batch_from_dimension(
-    raw: DataFrame, dimension: DataFrame
-) -> DataFrame:
-    """The online gate evaluated against a MAINTAINED status dimension
-    (see :func:`status_dimension_sink`) instead of re-reducing the raw
-    status stream: decode the batch's data messages and keep devices
-    whose dimension row says online. The dimension is one row per
-    device — always broadcastable, so the point stream never shuffles
-    (same plan shape as :func:`gated_batch`)."""
-    online = dimension.filter(F.col("status") == "online").select("device")
-    points = data_points(raw).withColumnRenamed("measurement", "device")
-    return (
-        points.join(F.broadcast(online), "device", "left_semi")
-        .withColumnRenamed("device", "measurement")
-    )
 
 
 def dedup_stream(

@@ -18,7 +18,9 @@ sys.path.insert(
     0, os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 )
 
-from tools.plan_audit import GOLDEN_PATH, audit_all  # noqa: E402
+from tools.plan_audit import (  # noqa: E402
+    GOLDEN_PATH, audit_all, repeated_python_udfs,
+)
 
 
 def test_plans_match_golden(spark, sf_dir):
@@ -51,3 +53,26 @@ def test_plans_match_golden(spark, sf_dir):
         "basket_affinity_parts", "profile_columns_exact",
         "events_rfm_segments",
     }
+
+
+def test_repeated_python_udf_flag():
+    """The same UDF id in two eval nodes on one path is a repeat (a
+    filter on its result pushed below its projection); the same id in
+    two union branches is one evaluation per row."""
+    nested = """*(2) Project [m#5, pythonUDF0#15 AS v#10]
++- ArrowEvalPython [dec(m#5, substring(p#1, 5, map(keys: [a], values: [3])[m#5]))#9], [pythonUDF0#15], 200
+   +- *(1) Filter (isnotnull(pythonUDF0#14) AND (size(pythonUDF0#14, false) > 0))
+      +- ArrowEvalPython [dec(m#5, substring(p#1, 5, map(keys: [a], values: [3])[m#5]))#9], [pythonUDF0#14], 200
+         +- Scan ExistingRDD[m#5,p#1]
+"""
+    union = """Generate posexplode(v#34), [m#7], true, [pos#35, value#36]
++- Union
+   :- ArrowEvalPython [dec(m#7, substring(pythonUDF0#44, 5))#33], [pythonUDF0#45], 200
+   :  +- ArrowEvalPython [enc(t#1)#8], [pythonUDF0#44], 200
+   :     +- FileScan parquet [t#1]
+   +- ArrowEvalPython [dec(m#20, substring(pythonUDF0#46, 5))#33], [pythonUDF0#47], 200
+      +- ArrowEvalPython [enc(t#15)#10], [pythonUDF0#46], 200
+         +- FileScan parquet [t#15]
+"""
+    assert repeated_python_udfs(nested) == {"9"}
+    assert repeated_python_udfs(union) == set()

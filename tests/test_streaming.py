@@ -194,11 +194,13 @@ def test_ingest_query_end_to_end(spark, tmp_path):
     status = {r.device: r.status for r in spark.read.parquet(out_dir + "/_status").collect()}
     assert status == {"dc-1": "online", "mx-1": "offline"}
 
-    # second run: mx-1 comes online, its packets now pass the gate
+    # second run: mx-1 comes online, its packets now pass the gate;
+    # dc-1 goes offline
     _raw_df(
         spark,
         [
             ("mate/mx-1/status", b"online", datetime(2024, 1, 2)),
+            ("mate/dc-1/status", b"offline", datetime(2024, 1, 2)),
             ("mate/mx-1/mx-status", mx_pkt, datetime(2024, 1, 2)),
         ],
     ).write.mode("append").parquet(input_dir)
@@ -208,76 +210,24 @@ def test_ingest_query_end_to_end(spark, tmp_path):
     assert {r.measurement for r in rows2} == {"dc-1", "mx-1"}
     assert len(rows2) == len(D.DC_FIELDS) + len(D.MX_FIELDS)
 
-
-def test_ingest_query_dimension_gate_end_to_end(spark, tmp_path):
-    """The composed loop (VERDICT r6 #7): status sink → maintained
-    snapshot-store dimension → dimension-gated points → parquet. Same
-    scenario as the batch-mode e2e, so the two gate modes must agree:
-    offline devices gated out, later online status re-admits them, and
-    the dimension itself is a queryable latest-per-device table."""
-    from solar_logger_spark.io import merge as M
-
-    input_dir = str(tmp_path / "in")
-    out_dir = str(tmp_path / "out")
-    ckpt = str(tmp_path / "ckpt")
-
-    ts = datetime(2024, 1, 1)
-    dc_pkt, dc_values = _packet("dc-1", 1704067200, 7.0)
-    mx_pkt, _ = _packet("mx-1", 1704153600, 8.0)
+    # third run carries no status rows: the persisted _status alone
+    # gates it — dc-1 stays out, mx-1 passes
+    dc_pkt3, _ = _packet("dc-1", 1704240000, 9.0)
+    mx_pkt3, _ = _packet("mx-1", 1704240000, 9.0)
     _raw_df(
         spark,
         [
-            ("mate/dc-1/status", b"online", ts),
-            ("mate/mx-1/status", b"offline", ts),
-            ("mate/dc-1/dc-status", dc_pkt, ts),
-            ("mate/mx-1/mx-status", mx_pkt, ts),
-        ],
-    ).write.parquet(input_dir)
-
-    q = I.ingest_query(spark, input_dir, out_dir, ckpt,
-                       gate_mode="dimension")
-    q.awaitTermination(120)
-
-    rows = spark.read.parquet(out_dir + "/points").collect()
-    assert {r.measurement for r in rows} == {"dc-1"}
-    assert len(rows) == len(D.DC_FIELDS)
-    got = {r.field: r.value for r in rows}
-    for f, v in dc_values.items():
-        assert got[f] == pytest.approx(v)
-    # the maintained dimension is independently queryable table state
-    dim = {
-        r.device: r.status
-        for r in M.read_table_snapshot(
-            spark, out_dir + "/_status_dim"
-        ).collect()
-    }
-    assert dim == {"dc-1": "online", "mx-1": "offline"}
-
-    # second delivery: mx-1 comes online — the ts-guarded MERGE
-    # advances the dimension and its packets now pass the gate
-    _raw_df(
-        spark,
-        [
-            ("mate/mx-1/status", b"online", datetime(2024, 1, 2)),
-            ("mate/mx-1/mx-status", mx_pkt, datetime(2024, 1, 2)),
+            ("mate/dc-1/dc-status", dc_pkt3, datetime(2024, 1, 3)),
+            ("mate/mx-1/mx-status", mx_pkt3, datetime(2024, 1, 3)),
         ],
     ).write.mode("append").parquet(input_dir)
-    q2 = I.ingest_query(spark, input_dir, out_dir, ckpt,
-                        gate_mode="dimension")
-    q2.awaitTermination(120)
-    rows2 = spark.read.parquet(out_dir + "/points").collect()
-    assert {r.measurement for r in rows2} == {"dc-1", "mx-1"}
-    assert len(rows2) == len(D.DC_FIELDS) + len(D.MX_FIELDS)
-    dim2 = {
-        r.device: r.status
-        for r in M.read_table_snapshot(
-            spark, out_dir + "/_status_dim"
-        ).collect()
-    }
-    assert dim2 == {"dc-1": "online", "mx-1": "online"}
-
-    with pytest.raises(ValueError, match="gate_mode"):
-        I.IngestBatchProcessor(out_dir, gate_mode="nope")
+    q3 = I.ingest_query(spark, input_dir, out_dir, ckpt)
+    q3.awaitTermination(120)
+    rows3 = spark.read.parquet(out_dir + "/points").collect()
+    assert len(rows3) == len(D.DC_FIELDS) + 2 * len(D.MX_FIELDS)
+    assert {r.measurement for r in rows3 if r.ts.day == 3} == {"mx-1"}
+    status3 = {r.device: r.status for r in spark.read.parquet(out_dir + "/_status").collect()}
+    assert status3 == {"dc-1": "offline", "mx-1": "online"}
 
 
 def test_windowed_rollup_stream(spark, tmp_path):
@@ -539,6 +489,80 @@ def test_ingest_batch_replay_is_idempotent(spark, tmp_path):
     assert spark.read.parquet(out + "/points").count() == 2 * len(D.MX_FIELDS)
 
 
+def test_ingest_batch_ungated_before_any_status(spark, tmp_path):
+    """Until any status message has been seen, points pass ungated and
+    no _status table is written."""
+    import os
+
+    out = str(tmp_path / "store")
+    pkt, _ = _packet("mx-1", 1704067200, 2.0)
+    I.IngestBatchProcessor(out)(
+        _raw_df(spark, [("mate/mx-1/mx-status", pkt, datetime(2024, 1, 1))]),
+        epoch_id=0,
+    )
+    assert spark.read.parquet(out + "/points").count() == len(D.MX_FIELDS)
+    assert not os.path.exists(out + "/_status")
+
+
+def test_ingest_batch_unreadable_status_raises(spark, tmp_path):
+    """An unreadable persisted _status (e.g. a crash during its
+    overwrite) must fail the batch, not be read as "no status" — that
+    would store an offline device's points."""
+    import os
+    import shutil
+
+    out = str(tmp_path / "store")
+    proc = I.IngestBatchProcessor(out)
+    proc(
+        _raw_df(spark, [("mate/mx-1/status", b"offline", datetime(2024, 1, 1))]),
+        epoch_id=0,
+    )
+    shutil.rmtree(out + "/_status")
+    os.makedirs(out + "/_status")
+    with open(out + "/_status/part-00000.parquet", "wb") as fh:
+        fh.write(b"not parquet")
+    pkt, _ = _packet("mx-1", 1704067200, 2.0)
+    with pytest.raises(Exception, match="parquet|Parquet"):
+        proc(
+            _raw_df(spark, [("mate/mx-1/mx-status", pkt, datetime(2024, 1, 1))]),
+            epoch_id=1,
+        )
+    assert not os.path.exists(out + "/points/measurement=mx-1")
+
+
+def test_ingest_batch_gate_filters_before_single_decode(spark, tmp_path):
+    """The processor's points plan evaluates the decode UDF in exactly
+    one ArrowEvalPython node, and the online-device filter sits below
+    it: offline devices' packets are never decoded."""
+    ts = datetime(2024, 1, 1)
+    batch = _raw_df(
+        spark,
+        [
+            ("mate/dc-1/status", b"online", ts),
+            ("mate/fx-1/status", b"online", ts),
+            ("mate/mx-1/status", b"offline", ts),
+            ("mate/dc-1/dc-status", _packet("dc-1", 1704067200, 1.0)[0], ts),
+            ("mate/mx-1/mx-status", _packet("mx-1", 1704067200, 2.0)[0], ts),
+        ],
+    )
+    points = I.IngestBatchProcessor(str(tmp_path / "store"))._batch_gated_points(
+        batch
+    )
+    jvm = spark._jvm
+    plan = points._jdf.queryExecution().explainString(
+        jvm.org.apache.spark.sql.execution.ExplainMode.fromString("simple")
+    )
+    lines = plan.splitlines()
+    udf = [i for i, ln in enumerate(lines) if "ArrowEvalPython" in ln]
+    assert len(udf) == 1, plan
+    gate = [
+        i for i, ln in enumerate(lines)
+        if "Filter" in ln and "dc-1" in ln and "fx-1" in ln and "mx-1" not in ln
+    ]
+    assert gate and min(gate) > udf[0], plan
+    assert {r.measurement for r in points.collect()} == {"dc-1"}
+
+
 def test_session_rollup_stream(spark, tmp_path):
     """Streaming session windows: two bursts separated by > gap become
     two sessions per (measurement, field)."""
@@ -703,164 +727,6 @@ def test_watermark_drops_too_late_event(spark, tmp_path):
     # averaged in and not emitted as a duplicate window
     assert len(first_window) == 1
     assert first_window[0].mean_value == pytest.approx(10.0)
-
-
-def test_stream_stream_gate_interval_join(spark, tmp_path):
-    """Stream-stream form of the gate: data passes only with an online
-    heartbeat within the validity interval before it."""
-    from solar_logger_spark.streaming.stateful import stream_stream_gated
-
-    input_dir = str(tmp_path / "in")
-    out_dir = str(tmp_path / "out")
-    ckpt = str(tmp_path / "ckpt")
-
-    pkt, _ = _packet("mx-1", 1704067200, 1.0)
-    rows = [
-        ("mate/mx-1/status", b"online", datetime(2024, 1, 1, 0, 0)),
-        # covered: 30 min after the heartbeat (validity 1h)
-        ("mate/mx-1/mx-status", pkt, datetime(2024, 1, 1, 0, 30)),
-        # not covered: 3h after the last heartbeat
-        ("mate/mx-1/mx-status", pkt, datetime(2024, 1, 1, 3, 0)),
-        # fx-1 never reported online at all
-        ("mate/fx-1/fx-status", pkt, datetime(2024, 1, 1, 0, 30)),
-    ]
-    _raw_df(spark, rows).write.parquet(input_dir)
-
-    raw = spark.readStream.schema(I.RAW_SCHEMA).parquet(input_dir)
-    q = (
-        stream_stream_gated(raw, status_validity="1 hour")
-        .writeStream.format("parquet")
-        .option("path", out_dir)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(180)
-
-    out = spark.read.parquet(out_dir).collect()
-    assert len(out) == 1
-    assert out[0].device == "mx-1"
-    assert out[0].arrival_ts == datetime(2024, 1, 1, 0, 30)
-
-
-def test_tws_gate_processor_logic():
-    """The transformWithState processor's gating logic, driven directly
-    with a stub handle (the streaming e2e below needs protobuf, which
-    this container lacks): in-batch ordering respected, state read on
-    entry and persisted on exit."""
-    import pandas as pd
-
-    from solar_logger_spark.streaming.stateful import _GateProcessor
-
-    class _StubValueState:
-        def __init__(self):
-            self._v = None
-
-        def exists(self):
-            return self._v is not None
-
-        def get(self):
-            return self._v
-
-        def update(self, v):
-            self._v = tuple(v)
-
-    class _StubHandle:
-        def __init__(self):
-            self.state = _StubValueState()
-
-        def getValueState(self, name, schema, ttlDurationMs=None):
-            return self.state
-
-    proc = _GateProcessor()
-    handle = _StubHandle()
-    proc.init(handle)
-
-    batch = pd.DataFrame(
-        {
-            "device": ["fx-1"] * 4,
-            "kind": ["status", "data", "status", "data"],
-            "payload": [b"online", b"pkt1", b"offline", b"pkt2"],
-            "arrival_ts": pd.to_datetime(
-                ["2024-01-01 00:00", "2024-01-01 00:01",
-                 "2024-01-01 00:02", "2024-01-01 00:03"]
-            ),
-        }
-    )
-    out = list(proc.handleInputRows(("fx-1",), iter([batch]), None))
-    kept = pd.concat(out) if out else pd.DataFrame()
-    assert list(kept["payload"]) == [b"pkt1"]  # only the while-online row
-    assert handle.state.get() == ("offline",)  # final status persisted
-
-    # next batch with no status rows: carried offline state gates all
-    batch2 = batch.iloc[[1]].assign(kind="data")
-    out2 = list(proc.handleInputRows(("fx-1",), iter([batch2]), None))
-    assert not out2
-
-
-def test_tws_gate_across_batches(spark, tmp_path):
-    """transformWithStateInPandas form of the online gate: same
-    semantics as the applyInPandasWithState test — in-batch status
-    ordering respected, state carried across micro-batches — on the
-    Spark 4 state API (requires the RocksDB state store provider and
-    protobuf for the state-server protocol)."""
-    pytest.importorskip(
-        "google.protobuf",
-        reason="transformWithState's Python protocol needs protobuf",
-    )
-    from solar_logger_spark.streaming.stateful import stateful_gated_stream_tws
-    from solar_logger_spark.streaming.ingest import RAW_SCHEMA
-
-    input_dir = tmp_path / "in"
-    input_dir.mkdir()
-    out_dir = str(tmp_path / "out")
-    ckpt = str(tmp_path / "ckpt")
-
-    fx_pkt, _ = _packet("fx-1", 1704067200, 1.0)
-    b1 = [
-        ("mate/fx-1/status", b"online", datetime(2024, 1, 1, 0, 0)),
-        ("mate/fx-1/fx-status", fx_pkt, datetime(2024, 1, 1, 0, 1)),
-        ("mate/fx-1/status", b"offline", datetime(2024, 1, 1, 0, 2)),
-        ("mate/fx-1/fx-status", fx_pkt, datetime(2024, 1, 1, 0, 3)),
-    ]
-    b2 = [("mate/fx-1/fx-status", fx_pkt, datetime(2024, 1, 1, 0, 4))]
-    spark.createDataFrame(b1, RAW_SCHEMA).coalesce(1).write.parquet(
-        str(input_dir / "f1")
-    )
-    spark.createDataFrame(b2, RAW_SCHEMA).coalesce(1).write.parquet(
-        str(input_dir / "f2")
-    )
-
-    provider_key = "spark.sql.streaming.stateStore.providerClass"
-    prev = spark.conf.get(provider_key, None)
-    spark.conf.set(
-        provider_key,
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
-    try:
-        raw = (
-            spark.readStream.schema(RAW_SCHEMA)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(str(input_dir) + "/*")
-        )
-        q = (
-            stateful_gated_stream_tws(raw)
-            .writeStream.format("parquet")
-            .option("path", out_dir)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(120)
-    finally:
-        if prev is None:
-            spark.conf.unset(provider_key)
-        else:
-            spark.conf.set(provider_key, prev)
-
-    rows = spark.read.parquet(out_dir).collect()
-    assert len(rows) == 1
-    assert rows[0].arrival_ts == datetime(2024, 1, 1, 0, 1)
 
 
 def test_windowed_rollup_streaming_approx_distinct(spark, tmp_path):
@@ -1046,108 +912,3 @@ def test_attribution_join_stream_equals_batch(spark, sf_dir, tmp_path):
     expected = {(r.cid, r.bid) for r in batch.select("cid", "bid").collect()}
     assert streamed == expected
     assert len(expected) > 0  # the corpus genuinely exercises the band
-
-
-# ---------------------------------------------------------------------------
-# maintained latest-status dimension (S3 x io/merge)
-
-
-def test_status_dimension_stream_equals_batch_latest(spark, tmp_path):
-    """Streamed status upserts through status_dimension_sink == batch
-    latest_per_key over the full status history — including a later
-    batch redelivering a STALE status, which must not regress the
-    dimension (the order_col guard)."""
-    from solar_logger_spark.io import merge as M
-    from solar_logger_spark.operators.asof import latest_per_key
-
-    t = lambda m: datetime(2024, 1, 1, 0, m)  # noqa: E731
-    batches = [
-        [
-            ("mate/dc-1/status", b"online", t(1)),
-            ("mate/fx-1/status", b"online", t(2)),
-            ("mate/dc-1/status", b"offline", t(3)),
-            ("mate/dc-1/1-data", b"junk", t(3)),        # non-status: ignored
-        ],
-        [
-            ("mate/fx-1/status", b"offline", t(10)),
-            ("mate/mx-1/status", b"online", t(11)),
-        ],
-        [
-            # stale redelivery: dc-1's old t(1) 'online' arrives AFTER
-            # the t(3) 'offline' was persisted — must not win
-            ("mate/dc-1/status", b"online", t(1)),
-            ("mate/fx-1/status", b"online", t(12)),
-        ],
-    ]
-    input_dir = tmp_path / "in"
-    dim_dir = str(tmp_path / "dim")
-    for i, rows in enumerate(batches):
-        _raw_df(spark, rows).coalesce(1).write.parquet(
-            str(input_dir / f"f{i}")
-        )
-    raw = (
-        spark.readStream.schema(I.RAW_SCHEMA)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(input_dir) + "/*")
-    )
-    q = (
-        raw.writeStream.foreachBatch(I.status_dimension_sink(dim_dir))
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-
-    got = {
-        r.device: (r.status, r.ts)
-        for r in M.read_table_snapshot(spark, dim_dir).collect()
-    }
-    all_raw = _raw_df(spark, [r for b in batches for r in b])
-    want = {
-        r.device: (r.status, r.ts)
-        for r in latest_per_key(
-            I.status_updates(all_raw), ["device"], payload_cols=["status"]
-        ).collect()
-    }
-    assert got == want
-    assert got["dc-1"] == ("offline", t(3))  # the stale replay lost
-
-    # the maintained dimension gates a batch exactly like gated_batch
-    data_raw = _raw_df(
-        spark,
-        [("mate/dc-1/1-data", b"x", t(20)), ("mate/mx-1/1-data", b"x", t(20))],
-    )
-    dim = M.read_table_snapshot(spark, dim_dir)
-    gated = I.gated_batch_from_dimension(data_raw, dim)
-    # dc-1 offline -> dropped before decode; mx-1 online -> decode path
-    assert {r.measurement for r in gated.collect()} <= {"mx-1"}
-
-
-def test_gate_mode_switch_seeds_dimension_from_status(spark, tmp_path):
-    """Switching a deployment from gate_mode='batch' to 'dimension'
-    must not forget learned statuses: the first dimension-mode batch
-    seeds the dimension from the persisted _status table, so a device
-    the batch-mode run learned was offline stays gated even when the
-    new delivery carries no status messages at all."""
-    out_dir = str(tmp_path / "out")
-    ts = datetime(2024, 1, 1)
-    dc_pkt, _ = _packet("dc-1", 1704067200, 7.0)
-    mx_pkt, _ = _packet("mx-1", 1704153600, 8.0)
-    batch_proc = I.IngestBatchProcessor(out_dir, gate_mode="batch")
-    batch_proc(
-        _raw_df(spark, [
-            ("mate/dc-1/status", b"online", ts),
-            ("mate/mx-1/status", b"offline", ts),
-        ]),
-        0,
-    )
-    dim_proc = I.IngestBatchProcessor(out_dir, gate_mode="dimension")
-    dim_proc(
-        _raw_df(spark, [
-            ("mate/dc-1/dc-status", dc_pkt, ts),
-            ("mate/mx-1/mx-status", mx_pkt, ts),  # no status rows here
-        ]),
-        1,
-    )
-    rows = spark.read.parquet(out_dir + "/points").collect()
-    assert {r.measurement for r in rows} == {"dc-1"}  # mx-1 stayed gated

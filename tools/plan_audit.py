@@ -7,6 +7,10 @@ Flags plan smells that matter at 100 TB:
     MapInPandas are the sanctioned Python paths)
   * a Window directly over an Exchange SinglePartition — a global
     analytic that moves the whole dataset to one task
+  * the same Python UDF (same expression id) in two
+    ArrowEvalPython/BatchEvalPython nodes, one below the other — each
+    row crosses to Python twice, e.g. when a filter on the UDF's result
+    is pushed below the projection that computes it
 
 Queries that intentionally trip the join flag (9 at r8 HEAD):
 similarity_cosine_topk and contrastive_hard_negatives (brute-force
@@ -44,6 +48,39 @@ GOLDEN_PATH = os.path.join(
 )
 
 
+def repeated_python_udfs(plan: str) -> set[str]:
+    """Expression ids of the Python UDFs that a ``simple`` explain
+    string evaluates in two ArrowEvalPython/BatchEvalPython nodes on one
+    root-to-leaf path, i.e. twice per row. (Union branches that each
+    evaluate the same UDF once share its id and are not repeats.)"""
+    lines = plan.splitlines()
+    indent = [
+        m.end() if (m := re.match(r"[\s:|]*[+:]- ", ln)) else 0
+        for ln in lines
+    ]
+    nodes = []  # (line, udf expression ids)
+    for n, ln in enumerate(lines):
+        m = re.search(r"(?:ArrowEvalPython|BatchEvalPython) \[", ln)
+        if m is None:
+            continue
+        depth = 0
+        for i in range(m.end() - 1, len(ln)):
+            depth += {"[": 1, "]": -1}.get(ln[i], 0)
+            if depth == 0:
+                break
+        nodes.append((n, set(re.findall(r"\)#(\d+)", ln[m.end():i]))))
+    repeated = set()
+    for n, ids in nodes:
+        end = next(
+            (k for k in range(n + 1, len(lines)) if indent[k] <= indent[n]),
+            len(lines),
+        )
+        for n2, ids2 in nodes:
+            if n < n2 < end:
+                repeated |= ids & ids2
+    return repeated
+
+
 def audit_frame(df) -> dict:
     """One query frame → {"flags": [...], "scans": n, "pushed": n}.
     Pure plan inspection (pre-execution explain) — deterministic for a
@@ -77,6 +114,8 @@ def audit_frame(df) -> dict:
             if window_above:
                 flags.append("single-partition global window")
                 break
+    if repeated_python_udfs(simple):
+        flags.append("Python UDF evaluated more than once")
     # (no codegen check: AQE's pre-execution explain elides codegen
     # ids, so presence can only be observed on the executed plan)
     n_scans = plan.count("Scan parquet") // 2 or plan.count("Scan parquet")
